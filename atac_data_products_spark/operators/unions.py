@@ -7,9 +7,11 @@ unions N per-dataset matrices while outer-aligning the feature axis.
 Spark-first design: in the engine's canonical **long/COO** matrix form
 (cell_id, feature_id, value), outer feature alignment is automatic —
 absent (cell, feature) pairs are simply absent rows — so the union is a
-plain `unionByName`, a shuffle-free scan union Catalyst flattens into one
-multi-source scan.  In wide form, `allowMissingColumns=True` supplies the
-missing-feature-as-null semantics.
+plain `unionByName`: one shuffle-free Union node over D separate
+FileScans, one per input.  Every plan that reads it re-runs all D scans
+unless the union is cached (plans.product.finalize_and_write does).  In
+wide form, `allowMissingColumns=True` supplies the missing-feature-as-null
+semantics.
 """
 
 from __future__ import annotations

@@ -44,6 +44,8 @@ from .functions.numeric import (
     mean_quantized_signed,
     mean_quantized_signed_sql,
     mean_quantized_sql,
+    ratio_scaled_int_signed,
+    ratio_scaled_int_signed_sql,
 )
 from .registry import ORACLES, _t, _values_sql, query
 from .sources.tables import events_with_ts, ntz_epoch_s, ntz_epoch_us, ts_us_expr
@@ -2109,12 +2111,13 @@ def _km_oracle() -> str:
              FROM q CROSS JOIN c1) WHERE rk = 1),
     m2 AS (SELECT a2.cluster_id, CAST(count(*) AS BIGINT) AS n, {sums}
            FROM a2 JOIN q USING (vec_id) GROUP BY a2.cluster_id),
-    c2 AS (SELECT cluster_id, [{cent}] AS c FROM m2)
+    c2 AS (SELECT cluster_id, [{cent}] AS c, s1, n FROM m2)
     SELECT a2.cluster_id,
            CAST(count(*) AS BIGINT) AS n_members,
            round(CAST(sum(CAST(floor(({df}) / 1000000000.0) AS BIGINT))
                       AS DOUBLE) / 1000.0, 3) AS inertia,
-           round(any_value(c2.c[1]) / {_KM_Q}, 6) AS centroid_d0
+           {ratio_scaled_int_signed_sql("any_value(c2.s1)", "any_value(c2.n)", 1)}
+               / {_KM_Q} AS centroid_d0
     FROM a2 JOIN q USING (vec_id) JOIN c2 ON a2.cluster_id = c2.cluster_id
     GROUP BY a2.cluster_id
     """
@@ -2226,7 +2229,8 @@ def vector_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             + ")"
         )
-        return m.select("cluster_id", cent.alias("c"))
+        # s1 and n ride along so centroid_d0 publishes the exact ratio
+        return m.select("cluster_id", cent.alias("c"), "s1", "n")
 
     a1 = assign(i0)
     c1 = update(a1)
@@ -2247,9 +2251,9 @@ def vector_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     return f.groupBy("cluster_id").agg(
         F.count("*").cast("bigint").alias("n_members"),
         F.round(F.sum(dq).cast("double") / 1000.0, 3).alias("inertia"),
-        F.round(F.any_value(F.element_at("c", 1)) / _KM_Q, 6).alias(
-            "centroid_d0"
-        ),
+        (
+            ratio_scaled_int_signed(F.any_value("s1"), F.any_value("n"), 1) / _KM_Q
+        ).alias("centroid_d0"),
     )
 
 

@@ -3,6 +3,7 @@
 Reference-shaped fixtures (FIXTURES.md) at toy scale, exercising every
 edge case: unmanifested dataset (dropped by J2), one-modality cells
 (dropped by J1), features present in only some datasets (kept by U1),
+features seen only on dropped one-modality cells (kept in var),
 BAM_data# barcode prefixes, age cast.
 """
 
@@ -34,6 +35,8 @@ def _fixtures(spark):
                 ("ds1", "BAM_data#AAAC", "chr1:500-1000", 1.0),
                 ("ds1", "GGGT", "chr1:0-500", 3.0),
                 ("ds1", "TTTT", "chr1:0-500", 1.0),  # bin-only cell (edge 2)
+                # bin-only cell whose feature no other cell has (edge 4)
+                ("ds1", "UUUU", "chr7:0-500", 1.0),
             ],
             coo,
         ),
@@ -74,10 +77,11 @@ def test_product_build_golden(spark, tmp_path):
     assert obs["ds2-CCCC"].race == "Asian"
     assert obs["ds1-AAAC"].tissue == "kidney"
 
-    # golden var union: outer feature alignment keeps per-dataset features
+    # golden var union: outer feature alignment keeps per-dataset features,
+    # including those seen only on cells intersect-obs drops (edge 4)
     x_bin, var_bin = result.modalities["atac_cell_by_bin"]
     assert {r.feature_id for r in var_bin.collect()} == {
-        "chr1:0-500", "chr1:500-1000", "chr2:0-500",
+        "chr1:0-500", "chr1:500-1000", "chr2:0-500", "chr7:0-500",
     }
     # matrix restricted to surviving cells
     assert {r.cell_id for r in x_bin.collect()} == {"ds1-AAAC", "ds1-GGGT", "ds2-CCCC"}
@@ -108,6 +112,74 @@ def test_product_partition_pruning(spark, tmp_path):
     plan = back.filter(F.col("dataset") == "ds1")._jdf.queryExecution().executedPlan().toString()
     # partition filter must reach the scan (no dataset rows from ds2 read)
     assert "PartitionFilters" in plan and "dataset" in plan
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_finalize_reads_unions_from_cache_and_releases_them(spark, tmp_path, monkeypatch):
+    """Every table write reads the modality unions from the cache (no
+    input re-scan), and the cache is gone once finalize_and_write
+    returns; the result frames stay usable afterwards."""
+    from atac_data_products_spark.plans import product
+
+    manifest, mats = _fixtures(spark)
+    result = build_product(manifest, mats, tissue="kidney", product_uuid="p-c")
+    plans = {}
+
+    def spy(out_dir, obs, modalities, metadata):
+        frames = {"obs": obs}
+        for mod, (x, var) in modalities.items():
+            frames[f"x_{mod}"], frames[f"var_{mod}"] = x, var
+        for name, df in frames.items():
+            plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        return write_product(out_dir, obs, modalities, metadata)
+
+    write_product = product.write_product
+    monkeypatch.setattr(product, "write_product", spy)
+    before = _persistent_rdds(spark)
+    finalize_and_write(result, manifest, str(tmp_path / "p"))
+
+    assert len(plans) == 5
+    for name, plan in plans.items():
+        assert "InMemoryTableScan" in plan, name
+    assert _persistent_rdds(spark) == before
+    assert all(not df.is_cached for df in result.shared)
+    assert {r.cell_id for r in result.obs.collect()} == {"ds1-AAAC", "ds1-GGGT", "ds2-CCCC"}
+    for x, var in result.modalities.values():
+        assert x.collect() and var.collect()
+
+
+def test_finalize_releases_cache_when_the_write_fails(spark, tmp_path):
+    manifest, mats = _fixtures(spark)
+    result = build_product(manifest, mats, tissue="kidney")
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_text("x")
+    before = _persistent_rdds(spark)
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    with pytest.raises(Py4JJavaError, match="ParentNotDirectoryException"):
+        finalize_and_write(result, manifest, str(blocker))
+    assert _persistent_rdds(spark) == before
+
+
+def test_finalize_keeps_a_cache_the_caller_owns(spark, tmp_path):
+    from pyspark import StorageLevel
+
+    manifest, mats = _fixtures(spark)
+    result = build_product(manifest, mats, tissue="kidney")
+    mine = result.shared[0].persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        before = _persistent_rdds(spark)
+        finalize_and_write(result, manifest, str(tmp_path / "p"))
+        assert mine.is_cached and mine.storageLevel != StorageLevel.NONE
+        # the caller's cache was filled by the build; the other is gone
+        assert _persistent_rdds(spark) == before + 1
+        assert result.shared[1].storageLevel == StorageLevel.NONE
+    finally:
+        mine.unpersist(blocking=True)
 
 
 def test_product_write_to_filesystem_uri(spark, tmp_path):

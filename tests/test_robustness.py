@@ -185,6 +185,46 @@ def test_kmeans_degenerate_identical_points(spark):
     assert got.loc[0, "inertia"] == 0.0
 
 
+def test_kmeans_centroid_half_unit_rounds_identically(spark, tmp_path):
+    """A two-member cluster whose d0 sum is odd puts centroid_d0 exactly
+    on a half µ-unit: -255277 / 2 = -127638.5 µ.  Spark and its DuckDB
+    oracle must both publish the half-away-from-zero -0.127639 (rounding
+    the double mean instead split them: -0.127639 vs -0.127638)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import atac_data_products_spark.registry_ext as rx
+    from atac_data_products_spark.registry import ORACLES
+
+    # vec 0..7 are the init centroids (d0 = -0.125, 1, ..., 7); vec 8
+    # sits next to vec 0, so cluster 0 is {0, 8} in both iterations
+    d0 = [-0.125, 1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, -0.130277]
+    emb = [[v] + [0.0] * (rx._KM_DIM - 1) for v in d0]
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(len(d0)), pa.int64()),
+            "embedding": pa.array(emb, pa.list_(pa.float32())),
+            "label": pa.array([0] * len(d0), pa.int32()),
+        }),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    got = rx.vector_kmeans_lloyd(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet'"
+        )
+        want = con.execute(ORACLES["vector_kmeans_lloyd"]).df()
+    finally:
+        con.close()
+    for df in (got, want):
+        row = df.set_index("cluster_id").loc[0]
+        assert row["n_members"] == 2
+        assert row["centroid_d0"] == -0.127639
+    assert len(got) == len(want) == 8
+
+
 def test_importance_resampling_hits_uniform_target(spark):
     """Accepted counts per lang must approximate the uniform target
     n_tot/n_langs for over-represented langs (md5-slot acceptance is

@@ -295,7 +295,6 @@ EXEMPT: dict[tuple[str, str], str] = {
     ("tpch_q1_pricing_summary", "sum_qty"): "exact-unit-divide",
     ("vector_centroids", "centroid_val"): "inexact-double",
     ("vector_dim_profile", "mean_x"): "inexact-double",
-    ("vector_kmeans_lloyd", "centroid_d0"): "exact-unit-divide",
     ("vector_kmeans_lloyd", "inertia"): "exact-unit-divide",
     ("vector_quantize_int8", "q"): "inexact-double",
     ("window_distribution_battery", "ratio_to_report"): "signed-denominator",
